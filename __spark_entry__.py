@@ -62,6 +62,11 @@ _PRIORITY = [
     # (the extended pre-checkpoint scale audit found and fixed a hidden
     # corpus-sized top-k window here — implementation changed, so pinned)
     "similarity_mmr_rerank",
+    # --- helper-touched pins: the guarded date/datetime parse chains
+    # (cast inference, multi-format dates, time elements) and the
+    # Arrow-built mapping/bidict dims --------------------------------------
+    "c3_ambivalent_cast", "c7_multiformat_date", "c9_c11_time_element",
+    "m2_synonym_mapping", "m3_ontology_normalize", "m5_membership_split",
     # --- last-seen-age recycling (the standing r11 policy: with every
     # query driver-checked at least once, the non-rep slots recycle the
     # queries whose most recent driver row is OLDEST — r12 refreshed

@@ -34,6 +34,11 @@ DATETIME_FORMATS = [
     "yyyy/MM/dd HH:mm:ss",
 ]
 BARE_YEAR_RX = r"^\d{4}$"
+# Necessary conditions for every pattern above: each starts with a digit
+# field (a year may carry a sign), and each datetime pattern has a ':'.
+# Strings failing them (HPO ids, gene symbols, HGVS, durations) skip the
+# try_to_timestamp chains, whose result on them is null anyway.
+DATE_LEAD_RX = r"^[+-]?[0-9]"
 
 
 def _c(col: Column | str) -> Column:
@@ -53,7 +58,7 @@ def parse_date_multi(col: Column | str) -> Column:
     bare_year = F.when(
         c.rlike(BARE_YEAR_RX), F.try_to_timestamp(F.concat(c, F.lit("-01-01")), F.lit("yyyy-MM-dd")).cast("date")
     )
-    return F.coalesce(bare_year, *attempts)
+    return F.when(c.rlike(DATE_LEAD_RX), F.coalesce(bare_year, *attempts))
 
 
 def parse_datetime_multi(col: Column | str) -> Column:
@@ -61,7 +66,8 @@ def parse_datetime_multi(col: Column | str) -> Column:
     c = _c(col)
     attempts = [F.try_to_timestamp(c, F.lit(f)) for f in DATETIME_FORMATS]
     date_fallback = parse_date_multi(c).cast("timestamp")
-    return F.coalesce(*attempts, date_fallback)
+    has_time = c.rlike(DATE_LEAD_RX) & c.contains(":")
+    return F.coalesce(F.when(has_time, F.coalesce(*attempts)), date_fallback)
 
 
 def parse_bool(col: Column | str) -> Column:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_key
+from ..session import local_frame
 
 NOT_FOUND = "NOT_FOUND"
 
@@ -45,8 +46,8 @@ def bidict_dim(spark: SparkSession, terms: Iterable[OntologyTerm],
         rows.append((t.id.strip().lower(), t.id, t.label, "id", resource))
         for s in t.synonyms:
             rows.append((s.strip().lower(), t.id, t.label, "synonym", resource))
-    return spark.createDataFrame(
-        rows, schema="key string, id string, label string, kind string, resource string"
+    return local_frame(
+        spark, rows, "key string, id string, label string, kind string, resource string"
     )
 
 
@@ -105,7 +106,7 @@ def pre_resolve(
         raise ValueError(f"distinct({column}) exceeds max_distinct={max_distinct}")
     resolved = resolver(terms)
     rows = [(k, v if v is not None else NOT_FOUND) for k, v in resolved.items()]
-    dim = spark.createDataFrame(rows or [("", NOT_FOUND)], schema="key string, resolved string")
+    dim = local_frame(spark, rows or [("", NOT_FOUND)], "key string, resolved string")
     keyed = df.withColumn("_k", normalize_key(F.col(column)))
     out = keyed.join(F.broadcast(dim.withColumnRenamed("key", "_k")), "_k", "left")
     return out.withColumn(
@@ -270,18 +271,6 @@ def http_search_transport(base_url: str, api_key: Optional[str] = None,
         return 200, value
 
     return transport
-
-
-def resource_dim(spark: SparkSession, resources: list[dict]) -> DataFrame:
-    """X5 BioRegistry resource metadata as a static dimension
-    ``(prefix, name, url, version, iri_prefix)``."""
-    return spark.createDataFrame(
-        [
-            (r["prefix"], r.get("name"), r.get("url"), r.get("version"), r.get("iri_prefix"))
-            for r in resources
-        ],
-        schema="prefix string, name string, url string, version string, iri_prefix string",
-    )
 
 
 def distinct_resources_used(fact: DataFrame, curie_col: str) -> DataFrame:
@@ -484,9 +473,3 @@ def fetch_and_cache_ontology(spark: SparkSession, url: str, cache_dir: str,
             )
     return ontology_factory(spark, doc_path, resource=resource, cache_dir=cache_dir)
 
-
-def labels_dim_from_terms(spark: SparkSession, terms: Iterable[OntologyTerm]) -> DataFrame:
-    """(id, label) rendering dimension from parsed terms."""
-    return spark.createDataFrame(
-        [(t.id, t.label) for t in terms], schema="id string, label string"
-    )

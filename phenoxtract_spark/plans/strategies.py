@@ -377,16 +377,17 @@ class MultiHpoColExpansionStrategy(Strategy):
                 long = pivoting.explode_multi_ids(df, subj, col, extract_hpo_ids)
                 # column order = global first occurrence (row-major, like the
                 # reference's insertion-ordered header map); row component =
-                # ingest rownum when captured, else the subject key
+                # ingest rownum when captured, else the subject key, compared
+                # as typed values so long ids and row numbers never tie
                 from ..sources.readers import INGEST_ROWNUM
 
                 row_ord = (
-                    F.col(INGEST_ROWNUM).cast("string")
+                    F.col(INGEST_ROWNUM)
                     if INGEST_ROWNUM in df.columns
                     else F.col(subj).cast("string")
                 )
                 occurrences = df.select(
-                    F.lpad(row_ord, 12, "0").alias("_ro"),
+                    row_ord.alias("_ro"),
                     F.posexplode(extract_hpo_ids(F.col(col))).alias("_p", "_id"),
                 ).filter(F.col("_id").isNotNull())
                 key_order = [

@@ -76,6 +76,36 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """Python rows (tuples in ``schema`` order; ``schema`` a StructType or
+    DDL string) → a DataFrame whose plan is a JVM ``LocalRelation``.
+
+    ``createDataFrame(list)`` plans as a Python-RDD scan, which every
+    downstream scan and broadcast replays through Python workers; an Arrow
+    table crosses to the JVM once and lands as a ``LocalRelation`` (below
+    ``spark.sql.execution.arrow.localRelationThreshold``).  Naive datetimes
+    in TIMESTAMP fields are read in the Python process's local zone, as the
+    list path reads them."""
+    from datetime import timezone
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, values, arrow_field in zip(schema.fields, columns, arrow_schema):
+        if isinstance(field.dataType, T.TimestampType):
+            # pyarrow drops a non-UTC offset, so hand it UTC instants
+            values = [None if v is None else v.astimezone(timezone.utc)
+                      for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
     """Load the driver's parquet tables from ``sf_dir`` as a dict of DataFrames."""
     names = names or [

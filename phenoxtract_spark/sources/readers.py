@@ -13,6 +13,9 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 
 def default_column_names(n: int) -> list[str]:
@@ -35,20 +38,20 @@ INGEST_ROWNUM = "_ingest_rownum"
 
 
 def attach_ingest_rownum(df: DataFrame) -> DataFrame:
-    """Attach a stable file-row-order column ``_ingest_rownum``.
+    """Attach a file-row-order column ``_ingest_rownum`` (BIGINT).
 
-    ``zipWithIndex`` numbers rows in partition order; for file-based sources
-    the input splits (and therefore the numbering) are deterministic across
-    runs, which ``monotonically_increasing_id`` is not (it changes under
-    AQE/repartition/task retry).  Used by collectors that need the
-    reference's last-ROW-wins upsert semantics (builder.rs upserts)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        df.schema.fields + [T.StructField(INGEST_ROWNUM, T.LongType(), False)]
-    )
-    rdd = df.rdd.zipWithIndex().map(lambda t: (*t[0], t[1]))
-    return df.sparkSession.createDataFrame(rdd, schema)
+    One ``monotonically_increasing_id()`` projection: the split index in the
+    upper bits, the row's position inside its split in the lower 33.  The
+    values follow file line order (partition-major, row-within-split) but
+    are not dense.  The id is only unstable when the projection sits after
+    a shuffle, whose partition contents vary with AQE, retries and
+    scheduling.  Here it sits directly on the scan (a file scan or a
+    local relation), whose splits are a deterministic function of the
+    files and the read options, so every action sees the same numbers.
+    Attach it before any repartition, join or aggregate.  Used by
+    collectors that need the reference's last-ROW-wins upsert semantics
+    (builder.rs upserts)."""
+    return df.withColumn(INGEST_ROWNUM, F.monotonically_increasing_id())
 
 
 def read_csv(spark: SparkSession, path: str, cfg: ExtractionConfig,
@@ -215,7 +218,7 @@ def vectors_to_df(spark: SparkSession, vectors: list[list], has_headers: bool) -
         tuple(cols[n][i] if i < len(cols[n]) else None for n in names)
         for i in range(n_rows)
     ]
-    return spark.createDataFrame(rows, schema=T.StructType(spark_fields))
+    return local_frame(spark, rows, T.StructType(spark_fields))
 
 
 def load_config(path: str) -> dict:

@@ -127,3 +127,88 @@ def test_time_element_tagged_union(spark):
     assert rows[0]["te"]["age"]["iso8601duration"] == "P47Y"
     assert rows[1]["te"]["timestamp"] is not None and rows[1]["te"]["age"] is None
     assert rows[2]["te"] is None
+
+
+# ---- parse guards: the guarded chains equal the unguarded ones -------------
+
+
+def _unguarded_date(c):
+    attempts = [F.try_to_timestamp(c, F.lit(f)).cast("date") for f in casting.DATE_FORMATS]
+    bare_year = F.when(
+        c.rlike(casting.BARE_YEAR_RX),
+        F.try_to_timestamp(F.concat(c, F.lit("-01-01")), F.lit("yyyy-MM-dd")).cast("date"),
+    )
+    return F.coalesce(bare_year, *attempts)
+
+
+def _unguarded_datetime(c):
+    attempts = [F.try_to_timestamp(c, F.lit(f)) for f in casting.DATETIME_FORMATS]
+    return F.coalesce(*attempts, _unguarded_date(c).cast("timestamp"))
+
+
+# one sample per DATE_FORMATS / DATETIME_FORMATS entry, in list order
+FORMAT_SAMPLES = [
+    "2020-01-02", "2020.01.02", "01/02/2020", "02-01-2020", "02.01.2020", "2.1.2020",
+    "2020-01-02 03:04:05", "2020-01-02T03:04:05", "2020-01-02T03:04:05+02:00",
+    "2020-01-02 03:04:05.123", "2020-01-02T03:04:05.123", "2020/01/02 03:04:05",
+]
+EDGE_SAMPLES = [
+    "2020", "0999", "+12345-01-01", "-0001-01-01", "+12345-01-01 00:00:00",
+    "-0001-01-01T00:00:00", "2020-01-02T03:04:05Z", "2020-01-02T03:04:05.123Z",
+    "2020-01-02T03:04:05.123+02:00", " 2020-01-02", "2020-01-02 ", "\t2020",
+    " 2020-01-02 03:04:05", "2020-01-02 03:04:05 ", "２０２０",
+    "２０２０-01-02", "2020-０１-02", "HP:0001945",
+    "NM_000546.6:c.215C>G", "BRCA1", "P47Y5M2D", "PT3H", "-P1D", "+PT1S", "",
+    None, "12:30", "1:2", "0", "2020-13-45", "31.12.2020 10:00",
+]
+
+
+def _string_pairs(df, col, guarded, reference):
+    rows = df.select(
+        guarded(F.col(col)).cast("string").alias("g"),
+        reference(F.col(col)).cast("string").alias("r"),
+    ).collect()
+    return [(r["g"], r["r"]) for r in rows]
+
+
+@pytest.mark.parametrize(
+    "guarded,reference,n_parsed",
+    [
+        (casting.parse_date_multi, _unguarded_date, len(casting.DATE_FORMATS)),
+        (casting.parse_datetime_multi, _unguarded_datetime, len(FORMAT_SAMPLES)),
+    ],
+    ids=["date", "datetime"],
+)
+def test_parse_guards_match_unguarded_chain(spark, guarded, reference, n_parsed):
+    """The lead-digit and ':' guards are necessary conditions of every
+    format, so they never change a result.  Compared as strings: a
+    Python ``date`` cannot hold year -1."""
+    df = spark.createDataFrame(
+        [(s,) for s in FORMAT_SAMPLES + EDGE_SAMPLES], "c string"
+    )
+    pairs = _string_pairs(df, "c", guarded, reference)
+    for s, (g, r) in zip(FORMAT_SAMPLES + EDGE_SAMPLES, pairs):
+        assert g == r, s
+    # the corpus is not vacuous: every sample of a format the chain
+    # covers parses
+    assert all(r is not None for _, r in pairs[:n_parsed])
+
+
+@pytest.mark.parametrize("sql_type", ["date", "timestamp"])
+@pytest.mark.parametrize(
+    "guarded,reference",
+    [
+        (casting.parse_date_multi, _unguarded_date),
+        (casting.parse_datetime_multi, _unguarded_datetime),
+    ],
+    ids=["date", "datetime"],
+)
+def test_parse_guards_match_unguarded_chain_typed(spark, sql_type, guarded, reference):
+    df = spark.createDataFrame(
+        [("2020-01-02 03:04:05",), ("-0001-01-01 00:00:00",),
+         ("+12345-06-07 08:09:10",), (None,)],
+        "s string",
+    ).select(F.col("s").cast(sql_type).alias("c"))
+    pairs = _string_pairs(df, "c", guarded, reference)
+    assert all(g == r for g, r in pairs), pairs
+    assert sum(r is not None for _, r in pairs) == 3

@@ -64,8 +64,8 @@ def sc(ident, kind, **kw):
     )
 
 
-@pytest.fixture(scope="module")
-def dims(spark):
+def golden_dims(spark):
+    """The offline lookup dims of the golden configuration."""
     with open(os.path.join(IT, "golden_dims.json")) as f:
         raw = json.load(f)
 
@@ -117,6 +117,11 @@ def dims(spark):
         "hgvs": hgvs,
         "resources": raw["resources"],
     }
+
+
+@pytest.fixture(scope="module")
+def dims(spark):
+    return golden_dims(spark)
 
 
 VITAL_ALIASES = {"Yes": "ALIVE", "No": "DECEASED"}
@@ -281,8 +286,8 @@ def normalize_packet(pp: dict) -> dict:
     return pp
 
 
-def _run_golden(spark, dims):
-    cdfs = _cohort_cdfs(spark)
+def golden_pipeline(spark, dims):
+    """The golden strategy list (test_pipeline_integration.rs order)."""
     pipe = Pipeline(cohort="my_cohort")
     pipe.add_strategy(AliasMapStrategy())
     pipe.add_strategy(
@@ -306,7 +311,12 @@ def _run_golden(spark, dims):
     pipe.add_strategy(MappingStrategy(spark, ContextKind.SUBJECT_SEX, mapping.SEX_MAP))
     pipe.add_strategy(AgeToIso8601Strategy())
     pipe.add_strategy(MultiHpoColExpansionStrategy())
+    return pipe
 
+
+def _run_golden(spark, dims):
+    cdfs = _cohort_cdfs(spark)
+    pipe = golden_pipeline(spark, dims)
     cdfs = pipe.preprocess(cdfs)
     cdfs = pipe.transform(cdfs)
     out = render_packets_v2(

@@ -161,6 +161,34 @@ def test_f3_multi_hpo_expansion(spark):
     assert "phenotypic_features" not in out["P002"] or out["P002"]["phenotypic_features"] == []
 
 
+@pytest.mark.parametrize("with_rownum", [False, True], ids=["subject_key", "ingest_rownum"])
+def test_f3_multi_hpo_column_order_long_keys(spark, with_rownum):
+    # Pivot columns follow first occurrence by (row key, position in cell).
+    # Subject ids longer than 12 characters, and row numbers past 12
+    # digits, must order as values; a 12-wide padded string key tied them.
+    from phenoxtract_spark.sources.readers import INGEST_ROWNUM
+
+    df = spark.createDataFrame(
+        [
+            ("PATIENT_00000012", "HP:0000002", 10**12 + 2),
+            ("PATIENT_00000001", "HP:0000003 then HP:0000001", 10**12 + 1),
+        ],
+        f"`Patient ID` string, HPOs string, {INGEST_ROWNUM} bigint",
+    )
+    if not with_rownum:
+        df = df.drop(INGEST_ROWNUM)
+    ctx = TableContext(
+        name="multi",
+        series_contexts=[
+            sc("Patient ID", ContextKind.SUBJECT_ID),
+            sc("HPOs", ContextKind.MULTI_HPO_ID, building_block_id="B"),
+        ],
+    )
+    (out,) = MultiHpoColExpansionStrategy().apply([ContextualizedDataFrame(df=df, context=ctx)])
+    pivoted = [c for c in out.df.columns if c.startswith("HP:")]
+    assert pivoted == ["HP:0000003#B", "HP:0000001#B", "HP:0000002#B"]
+
+
 def test_individual_fields_and_mapping_strategy(spark):
     demo = spark.createDataFrame(
         [

@@ -346,3 +346,50 @@ def test_kruskal_rank_joinback_never_broadcasts(spark, registry):
     df = registry["analytics_kruskal_wallis"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
+
+
+# ---- packet spine: pure Catalyst plans --------------------------------------
+
+# a Python-RDD scan (list-built frame, RDD round trip) or a Python-eval node
+_PYTHON_NODES = ("ExistingRDD", "EvalPython", "InPandas", "InArrow", "PythonUDF")
+
+
+def _python_nodes(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in _PYTHON_NODES if n in plan]
+
+
+def test_packet_spine_plans_stay_on_the_jvm(spark):
+    """Golden CSV contexts through read_csv(attach_rownum) → preprocess →
+    transform, with the strategy dims from bidict_dim and mapping_dim: no
+    frame of the spine replays rows through Python workers."""
+    from test_golden_reference_fixtures import _cohort_cdfs, golden_dims, golden_pipeline
+
+    cdfs = [c for c in _cohort_cdfs(spark) if c.context.name.startswith("CSV_Table")]
+    assert len(cdfs) == 5
+    pipe = golden_pipeline(spark, golden_dims(spark))
+    cdfs = pipe.preprocess(cdfs)
+    for cdf in cdfs:
+        assert _python_nodes(cdf.df) == [], ("preprocess", cdf.context.name)
+    for cdf in pipe.transform(cdfs):
+        assert _python_nodes(cdf.df) == [], ("transform", cdf.context.name)
+
+
+def test_spine_dims_are_local_relations(spark):
+    import datetime
+
+    from phenoxtract_spark.operators import mapping, ontology
+    from phenoxtract_spark.sources.readers import vectors_to_df
+
+    frames = {
+        "bidict_dim": ontology.bidict_dim(spark, ontology.MINI_HPO, resource="hp"),
+        "mapping_dim": mapping.mapping_dim(spark, mapping.SEX_MAP),
+        "vectors_to_df": vectors_to_df(
+            spark,
+            [["id", "P1", "P2"], ["height", 1.5, None],
+             ["seen", datetime.datetime(2025, 1, 1, 12), None]],
+            has_headers=True,
+        ),
+    }
+    for name, df in frames.items():
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name

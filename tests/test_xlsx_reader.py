@@ -187,6 +187,29 @@ def test_read_excel_header_must_be_string(spark, tmp_path):
         read_excel(spark, path, cfg)
 
 
+
+def test_vectors_to_df_naive_datetimes_keep_local_zone_instants(spark, monkeypatch):
+    # naive cells are wall-clock times of the Python process's zone, as
+    # createDataFrame(list) reads them, whatever the session zone is
+    import time
+
+    from phenoxtract_spark.sources.readers import vectors_to_df
+
+    cells = [dt.datetime(2025, 1, 1, 12), dt.datetime(2025, 7, 1, 0, 30, 0, 5), None]
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got = vectors_to_df(spark, [["seen", *cells]], has_headers=True)
+        want = spark.createDataFrame([(c,) for c in cells], "seen timestamp")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    q = "unix_micros(seen) AS us"
+    assert [r.us for r in got.selectExpr(q).collect()] == [
+        r.us for r in want.selectExpr(q).collect()
+    ]
+    assert got.selectExpr(q).first().us == 1735750800000000  # 17:00 UTC
+
 def test_ron_config_parse(tmp_path):
     """S7 RON format (~ config/config_loader.rs:8-43 FileFormat::Ron)."""
     from phenoxtract_spark.sources.readers import load_config
