@@ -67,6 +67,11 @@ _PRIORITY = [
     # Arrow-built mapping/bidict dims --------------------------------------
     "c3_ambivalent_cast", "c7_multiformat_date", "c9_c11_time_element",
     "m2_synonym_mapping", "m3_ontology_normalize", "m5_membership_split",
+    # --- pair-verify pins: the IVF near-dup callers now score through the
+    # shared bucket_pair_verify kernel, and both PQ paths return an empty
+    # top-k on an empty codebook -------------------------------------------
+    "similarity_neardup_pairs", "dedup_semantic_canonical",
+    "similarity_ivfpq_topk", "similarity_pq_adc_topk",
     # --- last-seen-age recycling (the standing r11 policy: with every
     # query driver-checked at least once, the non-rep slots recycle the
     # queries whose most recent driver row is OLDEST — r12 refreshed
@@ -83,11 +88,10 @@ _PRIORITY = [
     "events_gapfill_hourly", "events_locf_resample",
     "sketch_countmin_userfreq", "multimodal_audio_energy",
     "events_rollup_reuse", "events_scd2_versions",
-    "similarity_pq_adc_topk", "semi_join_customers_with_orders",
+    "semi_join_customers_with_orders",
     "anti_join_parts_never_bulk_ordered", "having_big_customers",
     "dedup_pipeline_canonical", "dedup_connected_components",
     "dedup_simhash_pairs", "text_tfidf_topk",
-    "dedup_semantic_canonical",
 ]
 
 

@@ -183,9 +183,10 @@ def semantic_canonical(vectors: DataFrame, centroids: DataFrame,
     (including itself).
 
     Returns (id_col, canonical_id, is_duplicate).  Work is Σ|bucket|²
-    via :func:`~..similarity.ivf_neardup_pairs` — the corpus never meets
-    itself outside a cluster, and the mate-min aggregate is one narrow
-    shuffle on id.  (SemDeDup — Abbas et al. 2023 — prunes within k-means
+    via :func:`~..similarity.ivf_neardup_pairs`, whose pair scoring is the
+    shared :func:`~..similarity.bucket_pair_verify` kernel — the corpus
+    never meets itself outside a cluster, and the mate-min aggregate is
+    one narrow shuffle on id.  (SemDeDup — Abbas et al. 2023 — prunes within k-means
     clusters exactly this way; transitive closure, when wanted, composes
     with ``dedup.connected_components`` on the pair list.)
     """

@@ -153,10 +153,11 @@ def assign_ivf_centroid(vectors: DataFrame, centroids: DataFrame,
     # from its schema, not the vectors' (r5 ADVICE; kmeans_assign already
     # does this with cid_type)
     cid_type = centroids.schema[id_col].dataType.simpleString()
+    schema = f"id {id_type}, centroid_id {cid_type}"
+    if keep_vec:
+        schema += f", v {vectors.schema[vec_col].dataType.simpleString()}"
     if not cen_rows:
-        return vectors.sparkSession.createDataFrame(
-            [], f"id {id_type}, centroid_id {cid_type}"
-        )
+        return vectors.sparkSession.createDataFrame([], schema)
     C = np.array([np.asarray(r["cv"], dtype=np.float64) for r in cen_rows])
     dim = C.shape[1]
     cn = np.zeros(C.shape[0])
@@ -165,7 +166,9 @@ def assign_ivf_centroid(vectors: DataFrame, centroids: DataFrame,
     cn = np.sqrt(cn)
     cids = np.array([r["cid"] for r in cen_rows])
     m = len(cids)
-    np_ = int(nprobe)
+    # probing past the centroid count emits every centroid once — the
+    # oracle's ``row_number() <= nprobe`` over m centroids
+    np_ = min(int(nprobe), m)
 
     v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     # CPU-dense per byte: a small embeddings file packed into 1-2 scan
@@ -214,9 +217,6 @@ def assign_ivf_centroid(vectors: DataFrame, centroids: DataFrame,
                     out["v"] = vecs
                 yield pd.DataFrame(out)
 
-    schema = f"id {id_type}, centroid_id {cid_type}"
-    if keep_vec:
-        schema += f", v {vectors.schema[vec_col].dataType.simpleString()}"
     return v.mapInPandas(run, schema=schema)
 
 
@@ -286,6 +286,15 @@ def _pq_codebook(samples: DataFrame, num_codes: int, id_col: str,
     return np.array([np.asarray(r["sv"], dtype=np.float64) for r in rows])
 
 
+def _empty_adc_topk(vectors: DataFrame, id_col: str) -> DataFrame:
+    """The ADC top-k schema with no rows: an empty codebook (no samples)
+    or no queries scores nothing, as the oracle's joins do."""
+    id_type = vectors.schema[id_col].dataType.simpleString()
+    return vectors.sparkSession.createDataFrame(
+        [], f"query_id {id_type}, neighbor_id {id_type}, approx_d2 double, rank bigint"
+    )
+
+
 def _pq_block_d2(X, CB, M: int, scale: float):
     """(len(X), M, S) rounded squared-L2 per sub-block.  The fold over the
     D in-block dims is SEQUENTIAL (vectorized across rows/codes) — the
@@ -353,6 +362,8 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
     dim, so the scoring join + per-pair sum + top-k window are all JVM
     built-ins.  Returns (query_id, neighbor_id, approx_d2, rank)."""
     CB = _pq_codebook(samples, num_codes, id_col, vec_col)
+    if not len(CB):
+        return _empty_adc_topk(vectors, id_col)
     M = int(num_subspaces)
     if CB.shape[1] % M:
         raise ValueError(
@@ -460,6 +471,8 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, samples: DataFrame,
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
     ).collect()
     query_rows.sort(key=lambda r: r["qid"])
+    if not len(CB) or not query_rows:
+        return _empty_adc_topk(vectors, id_col)
     Q = np.array([np.asarray(r["qv"], dtype=np.float64) for r in query_rows])
     qids = np.array([r["qid"] for r in query_rows])
     dim = CB.shape[1]
@@ -622,38 +635,120 @@ def hyperplane_candidate_pairs(vectors: DataFrame, dim: int, num_planes: int = 1
                         id_col="id", fp_col="sig")
 
 
-def pair_cos_rounded(round_dp: int = 6):
-    """Arrow-vectorized rounded cosine over two array columns of one
-    relation — the per-PAIR twin of the r5 ``assign_ivf_centroid`` path.
-    ``F.aggregate`` lambdas evaluate interpreted per pair; this scores a
-    whole Arrow batch per numpy pass, with the dot/norm folds accumulated
-    SEQUENTIALLY over the dimension index so the accumulated floats are
-    bitwise-equal to the old ``dot``/``l2_norm`` expressions and the
-    DuckDB oracle's unnest-ordered sums (final-round caveat: see the
-    module docstring on ``_round_half_up``)."""
-    from pyspark.sql.functions import pandas_udf
+# Per-block vector payload of the pair grid: r13's measured sf1 optimum,
+# 384 rows of 64 float64s (~192 KiB), which balanced Arrow gather-slice
+# size against task count.  Held as bytes so rows per block follow the
+# vector width: callers pass their bucket estimate in bytes.
+_BLOCK_TARGET_BYTES = 384 * 64 * 8
+# caps each pair gather slice at ~_PAIR_CHUNK·dim·8·2 bytes — bounds MEMORY
+# on a degenerate giant bucket, never the Σ|bucket|² work
+_PAIR_CHUNK = 250_000
 
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if not len(va):
-            return pd.Series([], dtype="float64")
-        A = np.array([np.asarray(x, dtype=np.float64) for x in va])
-        B = np.array([np.asarray(x, dtype=np.float64) for x in vb])
-        d_ = np.zeros(len(va))
-        na = np.zeros(len(va))
-        nb = np.zeros(len(va))
-        for d in range(A.shape[1]):  # sequential fold — see docstring
-            d_ += A[:, d] * B[:, d]
-            na += A[:, d] * A[:, d]
-            nb += B[:, d] * B[:, d]
-        return pd.Series(_round_half_up(d_ / (np.sqrt(na) * np.sqrt(nb)), round_dp))
 
-    return _cos
+def bucket_pair_verify(df: DataFrame, bucket_cols: list[str], threshold: float,
+                       *, distinct_col: str | None = None,
+                       est_bucket_bytes: int = 0) -> DataFrame:
+    """Bucket-local cosine pair verification: the one grouped-map kernel
+    behind the IVF near-dup and the LSH hard-negative paths.
+
+    ``df`` carries ``id``, the vector ``v`` and ``bucket_cols``; only
+    pairs sharing a bucket are scored.  Returns (id_a, id_b, cos) with
+    id_a < id_b.  With ``distinct_col`` set, only pairs whose values are
+    null-safe DISTINCT are scored (the mask runs before the dot), and
+    ``{distinct_col}_a``/``_b`` precede ``cos``.  A pair survives when its
+    6-dp cosine is ``>= threshold`` or NaN (a zero-norm vector; Arrow
+    hands the NaN to Spark as NULL).
+
+    Shape (r12, guide §2.3/§4.1/§8): one bucket-keyed shuffle of n
+    (id, vector) rows; inside a group the pair enumeration, the cosine
+    fold and the threshold run in one numpy pass, and only surviving
+    pairs, without their arrays, return to the JVM.
+
+    Triangle grid (REPOSE-style partition balancing): a bucket count fixed
+    by query semantics (16 LSH buckets) would cap the verify at one task
+    per bucket while pairs grow |bucket|².  When ``est_bucket_bytes``, the
+    caller's estimate of one bucket's vector payload, exceeds one
+    ``_BLOCK_TARGET_BYTES`` block, each bucket splits into s
+    id-hash blocks grouped by (bucket, block_i, block_j).  Every unordered
+    pair lands in EXACTLY one of the s(s+1)/2 cells (diagonal = triu
+    within a block, off-diagonal = full cross of two blocks) and each
+    vector ships to s cells; s = 1 skips the explode.  The result is
+    identical for every s.  The default estimate (0) means s = 1.
+
+    Numeric parity: norms accumulate once per vector and the pair dot is
+    one SEQUENTIAL fold over the dimension index — the fold order of the
+    ``dot``/``l2_norm`` expressions and of the DuckDB oracles'
+    unnest-ordered sums — then ``_round_half_up`` (module docstring)."""
+    import math
+
+    s = max(1, math.ceil(est_bucket_bytes / _BLOCK_TARGET_BYTES))
+    id_type = df.schema["id"].dataType.simpleString()
+    schema = f"id_a {id_type}, id_b {id_type}, "
+    if distinct_col:
+        t = df.schema[distinct_col].dataType.simpleString()
+        schema += f"{distinct_col}_a {t}, {distinct_col}_b {t}, "
+    schema += "cos double"
+
+    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
+        order = np.argsort(pdf["id"].values, kind="stable")
+        ids = pdf["id"].values[order]
+        V = np.array([np.asarray(x, dtype=np.float64) for x in pdf["v"].values[order]])
+        sq = np.zeros(len(ids))
+        for d in range(V.shape[1]):  # per-vector norm, sequential fold
+            sq += V[:, d] * V[:, d]
+        nrm = np.sqrt(sq)
+        if s > 1 and pdf["ci"].iat[0] != pdf["cj"].iat[0]:
+            # off-diagonal grid cell: all pairs across the two blocks
+            blk = pdf["blk"].values[order]
+            li = np.flatnonzero(blk == pdf["ci"].iat[0])
+            lj = np.flatnonzero(blk == pdf["cj"].iat[0])
+            ia, ib = np.repeat(li, len(lj)), np.tile(lj, len(li))
+            # normalize to id_a < id_b (ids are unique; blocks are disjoint)
+            swap = ids[ia] > ids[ib]
+            ia, ib = np.where(swap, ib, ia), np.where(swap, ia, ib)
+        else:
+            # whole bucket (s = 1) or diagonal cell: triu over sorted ids
+            ia, ib = np.triu_indices(len(ids), k=1)
+        if distinct_col:
+            lab = pdf[distinct_col].values[order]
+            nul = pd.isna(lab)
+            same = (lab[ia] == lab[ib]) | (nul[ia] & nul[ib])
+            ia, ib = ia[~same], ib[~same]
+        ka, kb, kc = [ia[:0]], [ib[:0]], [np.zeros(0)]
+        for lo in range(0, len(ia), _PAIR_CHUNK):
+            sa, sb = ia[lo : lo + _PAIR_CHUNK], ib[lo : lo + _PAIR_CHUNK]
+            A, B = V[sa], V[sb]
+            dot = np.zeros(len(sa))
+            for d in range(V.shape[1]):  # sequential fold — see docstring
+                dot += A[:, d] * B[:, d]
+            cos = _round_half_up(dot / (nrm[sa] * nrm[sb]), 6)
+            keep = (cos >= threshold) | np.isnan(cos)
+            ka.append(sa[keep])
+            kb.append(sb[keep])
+            kc.append(cos[keep])
+        ka, kb = np.concatenate(ka), np.concatenate(kb)
+        out = {"id_a": ids[ka], "id_b": ids[kb]}
+        if distinct_col:
+            out[f"{distinct_col}_a"], out[f"{distinct_col}_b"] = lab[ka], lab[kb]
+        out["cos"] = np.concatenate(kc)
+        return pd.DataFrame(out)
+
+    keys = list(bucket_cols)
+    if s > 1:
+        df = (
+            df.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(s)).cast("int"))
+            .withColumn("_mate", F.explode(F.array(*[F.lit(j) for j in range(s)])))
+            .withColumn("ci", F.least("blk", "_mate"))
+            .withColumn("cj", F.greatest("blk", "_mate"))
+            .drop("_mate")
+        )
+        keys += ["ci", "cj"]
+    return df.groupBy(*keys).applyInPandas(verify, schema=schema)
 
 
 def ivf_neardup_pairs(vectors: DataFrame, centroids: DataFrame,
                       threshold: float = 0.4, id_col: str = "vec_id",
-                      vec_col: str = "embedding", round_dp: int = 6) -> DataFrame:
+                      vec_col: str = "embedding") -> DataFrame:
     """Near-duplicate pairs via IVF buckets: assign every vector to its
     nearest centroid (broadcast dim), generate pairs ONLY within a bucket,
     then cosine-verify.  Σ|bucket|² work instead of |corpus|²; with C
@@ -663,81 +758,14 @@ def ivf_neardup_pairs(vectors: DataFrame, centroids: DataFrame,
     gate in tests measures this against brute force).
     Returns (id_a, id_b, cos).
 
-    Shape (r12, guide §2.3/§4.1/§8 — move the heavy bytes once): the old
-    phrasing self-joined the assignment on centroid_id, MATERIALIZING the
-    Σ|bucket|² pair list as JVM rows each carrying TWO full float arrays,
-    then shipped both arrays per pair through Arrow into a pandas_udf —
-    the payload crossed the shuffle and the Python boundary once PER PAIR.
-    Now the verification is bucket-local ``applyInPandas``: one shuffle of
-    n (id, vector) rows keyed by centroid, and inside each bucket the pair
-    enumeration, the cosine fold, and the threshold filter all run in one
-    numpy pass — every vector crosses the boundary once per bucket, and
-    only the SURVIVING pairs (dup-density-sized, arrays dropped) return to
-    the JVM.  Arrow bytes per bucket fall from 2·|bucket|²·dim to
-    |bucket|·dim.
-
-    Numeric parity is preserved fold-for-fold (bitwise, same argument as
-    ``pair_cos_rounded``): per-vector norms accumulate sequentially over
-    the dimension index exactly as the per-pair kernel accumulated them,
-    the pair dot is the same sequential fold, and the threshold keeps
-    Spark's NaN-is-greatest comparison semantics (a NaN cosine — zero-norm
-    vector — passes ``>= threshold`` in Spark SQL and DuckDB alike, so it
-    passes here too)."""
-    import numpy as np
-    import pandas as pd
-
-    id_type = vectors.schema[id_col].dataType.simpleString()
+    A thin composition: :func:`assign_ivf_centroid` carries the vector
+    through its batch (``keep_vec``) and :func:`bucket_pair_verify` scores
+    each centroid bucket.  The bucket count grows with the corpus, so one
+    group per bucket is already parallel and the verify runs without a
+    grid (s = 1)."""
     assign = assign_ivf_centroid(vectors, centroids, id_col, vec_col,
                                  keep_vec=True)
-    # pair-index chunk bound: caps the per-slice gather at ~dim·8·2·CHUNK
-    # bytes even on a degenerate giant bucket (the Σ|bucket|² work itself
-    # is the algorithm's contract; this bounds MEMORY, not work)
-    chunk = 2_000_000
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_a, out_b, out_c = [], [], []
-        m = len(pdf)
-        if m >= 2:
-            order = np.argsort(pdf["id"].values, kind="stable")
-            ids = pdf["id"].values[order]
-            V = np.array(
-                [np.asarray(x, dtype=np.float64) for x in pdf["v"].values[order]]
-            )
-            dim = V.shape[1]
-            # per-vector norm: the same sequential fold over d the per-pair
-            # kernel ran (na += a_d*a_d), hoisted to once per vector —
-            # identical adds in identical order, so sqrt(nrm) is bitwise
-            # equal to the per-pair recomputation it replaces
-            sq = np.zeros(m)
-            for d in range(dim):
-                sq += V[:, d] * V[:, d]
-            nrm = np.sqrt(sq)
-            ia, ib = np.triu_indices(m, k=1)
-            for lo in range(0, len(ia), chunk):
-                sa, sb = ia[lo : lo + chunk], ib[lo : lo + chunk]
-                A, B = V[sa], V[sb]
-                dot = np.zeros(len(sa))
-                for d in range(dim):  # sequential fold — see docstring
-                    dot += A[:, d] * B[:, d]
-                cos = _round_half_up(dot / (nrm[sa] * nrm[sb]), round_dp)
-                # Spark/DuckDB order NaN above every double, so a NaN cos
-                # passes `cos >= threshold`; numpy's NaN >= x is False —
-                # replicate the engine semantics explicitly
-                keep = (cos >= threshold) | np.isnan(cos)
-                out_a.append(ids[sa[keep]])
-                out_b.append(ids[sb[keep]])
-                out_c.append(cos[keep])
-        if not out_a:
-            return pd.DataFrame({"id_a": pd.Series([], dtype=pdf["id"].dtype),
-                                 "id_b": pd.Series([], dtype=pdf["id"].dtype),
-                                 "cos": pd.Series([], dtype="float64")})
-        return pd.DataFrame({"id_a": np.concatenate(out_a),
-                             "id_b": np.concatenate(out_b),
-                             "cos": np.concatenate(out_c)})
-
-    return assign.groupBy("centroid_id").applyInPandas(
-        verify, schema=f"id_a {id_type}, id_b {id_type}, cos double"
-    )
+    return bucket_pair_verify(assign, ["centroid_id"], threshold)
 
 
 def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",

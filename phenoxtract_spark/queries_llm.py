@@ -600,25 +600,18 @@ def embedding_hard_negatives(spark, sf_dir):
     with cosine ≥ 0.3 — the confusable pairs a contrastive loss learns
     most from, vs the uniform `embedding_ring_negatives`.  Pairing is
     bucket-bounded (Σ|bucket|², never all-pairs); norms compute once per
-    vector and the dot runs on the candidate pairs only."""
-    import numpy as np
-    import pandas as pd
+    vector and the dot runs on the candidate pairs only.
 
+    Label and vector ride the signature kernel's Arrow batch
+    (``extra_cols``/``keep_vec``), and the cross-label verify is
+    :func:`~.operators.similarity.bucket_pair_verify` keyed by signature.
+    The bucket count is FIXED at 16 (4 planes — query semantics), so the
+    kernel's triangle grid, sized from the parquet row count (catalog
+    statistics at 100 TB), is what keeps the verify parallel as buckets
+    grow (r12: 42 s → 21 s at sf1)."""
     from .operators import similarity
-    from .operators.similarity import _round_half_up
 
     e = read_table(spark, sf_dir, "embeddings")
-    # r12 (guide §2.3/§4.1/§8): the old shape re-joined the corpus by id to
-    # attach label+vector to the signature, checkpointed it, SELF-JOINED on
-    # sig — materializing ~n²/16 pair rows each carrying two 64-dim array
-    # payloads — and shipped both arrays per pair through Arrow into the
-    # cosine pandas_udf.  Now label and vector ride the signature kernel's
-    # Arrow batch (extra_cols/keep_vec — free), and the verification is
-    # bucket-local applyInPandas: ONE sig-keyed shuffle of n vector rows,
-    # pair enumeration + cross-label mask + the same sequential-fold cosine
-    # inside one numpy pass per bucket, only surviving pairs back to the
-    # JVM.  Folds are order-identical to pair_cos_rounded, so floats (and
-    # the 6-dp rounding) are unchanged.
     sig = similarity.hyperplane_signature(
         e.select(
             "vec_id", "label",
@@ -627,104 +620,11 @@ def embedding_hard_negatives(spark, sf_dir):
         dim=64, num_planes=4, vec_col="ve",
         extra_cols=["label"], keep_vec=True,
     )
-    # Parallelism does NOT come free with bucket-local grouping here: the
-    # bucket count is FIXED at 16 (4 planes — query semantics), so one
-    # group per sig caps the verify at 16 tasks while per-bucket pairs grow
-    # n²/256 (measured sf1: 16 tasks, 42 s vs the pair-join's 24 s).  The
-    # triangle-grid decomposition restores it: split each bucket into s
-    # id-hash blocks and group by (sig, block_i, block_j) — every unordered
-    # pair lands in EXACTLY one of the s(s+1)/2 cells (diagonal cell = triu
-    # within a block, off-diagonal = full cross of two blocks), each vector
-    # ships to s cells (n·s·dim Arrow bytes — still ≪ the pair join's
-    # 2·Σ|bucket|²·dim), and cells spread over the cluster.  s derives from
-    # the parquet row count (catalog statistics at 100 TB); the per-block
-    # row target derives from BYTES (r13, r12 verdict item 6): the sf1
-    # measurement that picked 384 rows was taken at dim=64, i.e. ~192 KiB
-    # of float64 payload per block — the quantity the A/B actually
-    # balanced (Arrow gather-slice size vs task count), so it is what
-    # should stay constant if the vector width ever changes.  At dim=64
-    # this is exactly the measured 384; s=1 (small inputs) skips the
-    # explode entirely.
-    import math
-
-    from .queries_core import table_num_rows
-
-    dim = 64  # query semantics: the 64-dim embeddings table
-    block_target_bytes = 384 * 64 * 8  # r12's measured sf1 optimum, as bytes
-    rows_per_block = max(1, block_target_bytes // (dim * 8))
-    m_est = max(1, table_num_rows(sf_dir, "embeddings") // 16)
-    s = max(1, math.ceil(m_est / rows_per_block))
-    chunk = 250_000  # caps each gather slice at ~chunk·dim·8·2 bytes
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "id_a": pd.Series([], dtype="int64"),
-            "id_b": pd.Series([], dtype="int64"),
-            "label_a": pd.Series([], dtype="float64"),
-            "label_b": pd.Series([], dtype="float64"),
-            "cos_sim": pd.Series([], dtype="float64"),
-        })
-        m = len(pdf)
-        if m < 2:
-            return empty
-        order = np.argsort(pdf["id"].values, kind="stable")
-        ids = pdf["id"].values[order]
-        labels = pdf["label"].values[order]
-        lab_null = pd.isna(labels)
-        V = np.array(
-            [np.asarray(x, dtype=np.float64) for x in pdf["v"].values[order]]
-        )
-        dim = V.shape[1]
-        sq = np.zeros(m)
-        for d in range(dim):  # per-vector norm, same sequential fold
-            sq += V[:, d] * V[:, d]
-        nrm = np.sqrt(sq)
-        if "ci" in pdf.columns and pdf["ci"].iat[0] != pdf["cj"].iat[0]:
-            # off-diagonal grid cell: all pairs across the two blocks
-            blk = pdf["blk"].values[order]
-            li = np.flatnonzero(blk == pdf["ci"].iat[0])
-            lj = np.flatnonzero(blk == pdf["cj"].iat[0])
-            ia = np.repeat(li, len(lj))
-            ib = np.tile(lj, len(li))
-            # normalize to id_a < id_b (ids are unique; blocks are disjoint)
-            swap = ids[ia] > ids[ib]
-            ia, ib = np.where(swap, ib, ia), np.where(swap, ia, ib)
-        else:
-            # whole bucket (s=1) or diagonal cell: triu over sorted ids
-            ia, ib = np.triu_indices(m, k=1)
-        # cross-label (null-safe IS DISTINCT FROM) mask BEFORE the dot —
-        # same pre-filter position as the old join condition
-        same = (labels[ia] == labels[ib]) | (lab_null[ia] & lab_null[ib])
-        ia, ib = ia[~same], ib[~same]
-        out = []
-        for lo in range(0, len(ia), chunk):
-            sa, sb = ia[lo : lo + chunk], ib[lo : lo + chunk]
-            A, B = V[sa], V[sb]
-            dot = np.zeros(len(sa))
-            for d in range(dim):  # sequential fold — see pair_cos_rounded
-                dot += A[:, d] * B[:, d]
-            cos = _round_half_up(dot / (nrm[sa] * nrm[sb]), 6)
-            keep = (cos >= 0.3) | np.isnan(cos)  # engine NaN-greatest semantics
-            out.append(pd.DataFrame({
-                "id_a": ids[sa[keep]], "id_b": ids[sb[keep]],
-                "label_a": labels[sa[keep]], "label_b": labels[sb[keep]],
-                "cos_sim": cos[keep],
-            }))
-        return pd.concat(out) if out else empty
-
-    lbl_type = e.schema["label"].dataType.simpleString()
-    out_schema = (f"id_a bigint, id_b bigint, label_a {lbl_type}, "
-                  f"label_b {lbl_type}, cos_sim double")
-    if s == 1:
-        return sig.groupBy("sig").applyInPandas(verify, schema=out_schema)
-    g = (
-        sig.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(s)).cast("int"))
-        .withColumn("_mate", F.explode(F.array(*[F.lit(j) for j in range(s)])))
-        .withColumn("ci", F.least("blk", "_mate"))
-        .withColumn("cj", F.greatest("blk", "_mate"))
-        .drop("_mate")
-    )
-    return g.groupBy("sig", "ci", "cj").applyInPandas(verify, schema=out_schema)
+    # one sig bucket's float64 payload: n/16 vectors of 64 dims
+    est = table_num_rows(sf_dir, "embeddings") // 16 * 64 * 8
+    return similarity.bucket_pair_verify(
+        sig, ["sig"], 0.3, distinct_col="label", est_bucket_bytes=est
+    ).withColumnRenamed("cos", "cos_sim")
 
 
 @q(

@@ -87,7 +87,8 @@ def semantic_canonical(spark, sf_dir):
     (√n centroids, broadcast), cosine-verify pairs ONLY within a cluster,
     then map every vector to the smallest id among its semantic mates.
     Output is one row per vector — the keep/drop decision a curation
-    pipeline consumes directly."""
+    pipeline consumes directly.  Pairs are scored by the shared
+    ``similarity.bucket_pair_verify`` kernel."""
     import math
 
     e = read_table(spark, sf_dir, "embeddings")

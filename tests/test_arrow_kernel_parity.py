@@ -198,23 +198,30 @@ def test_hyperplane_signature_matches_expression_path(spark, vecs):
     assert got == ref
 
 
-def test_pair_cos_matches_expression_path(vecs):
-    a = vecs.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
+def test_bucket_pair_verify_matches_expression_path(spark, vecs):
+    """Every in-bucket pair's cos equals the expression path's
+    ``F.round(dot / (l2·l2), 6)``, negative cosines included (threshold
+    -1 keeps every finite pair); a zero vector's NaN cos passes the
+    threshold (the kernel's ``cos >= threshold | isnan(cos)`` rule)."""
+    zero = spark.createDataFrame(
+        [(999, [0.0] * 16)], "vec_id bigint, embedding array<double>"
     )
-    b = vecs.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
-    )
-    pairs = a.crossJoin(b).filter(
-        (F.col("id_a") < F.col("id_b")) & (F.col("id_b") % 7 == 0)
+    v = vecs.unionByName(zero).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
+        (F.col("vec_id") % 3).alias("b"),
     )
     got = {
         (r["id_a"], r["id_b"], r["cos"])
-        for r in pairs.select(
-            "id_a", "id_b",
-            similarity.pair_cos_rounded(6)(F.col("va"), F.col("vb")).alias("cos"),
-        ).collect()
+        for r in similarity.bucket_pair_verify(v, ["b"], -1.0).collect()
     }
+    a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
+                 F.col("b").alias("ba"))
+    b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
+                 F.col("b").alias("bb"))
+    pairs = a.crossJoin(b).filter(
+        (F.col("ba") == F.col("bb")) & (F.col("id_a") < F.col("id_b"))
+        & (F.col("id_b") != 999)
+    )
     ref_cos = F.round(
         dot(F.col("va"), F.col("vb"))
         / (l2_norm(F.col("va")) * l2_norm(F.col("vb"))),
@@ -224,4 +231,8 @@ def test_pair_cos_matches_expression_path(vecs):
         (r["id_a"], r["id_b"], r["cos"])
         for r in pairs.select("id_a", "id_b", ref_cos.alias("cos")).collect()
     }
-    assert got == ref
+    assert {t for t in got if t[1] != 999} == ref and ref
+    zero_cos = {t[:2]: t[2] for t in got if t[1] == 999}
+    assert set(zero_cos) == {(i, 999) for i in range(0, 80, 3)} | {(102, 999)}
+    # the kernel's NaN reaches Spark as NULL (pandas NaN → Arrow null)
+    assert all(c is None for c in zero_cos.values())

@@ -589,19 +589,33 @@ def test_completeness_profile_exact_counts(spark, tmp_path):
     assert (s.n_null, s.n_distinct) == (1, 2)
 
 
-def test_hard_negatives_grid_decomposition_matches_flat(spark, sf_dir, monkeypatch):
-    """The r12 triangle-grid decomposition (s id-hash blocks per sig
-    bucket, pairs enumerated per (sig, block_i, block_j) cell) must
-    return EXACTLY the flat per-bucket enumeration's pairs — the block
-    split is a parallelism shape, never a semantics change.  s derives
-    from the parquet row count, so forcing the count high exercises the
-    s>1 path on the small fixture."""
+@pytest.mark.parametrize(
+    "name", ["embedding_hard_negatives", "similarity_neardup_pairs"]
+)
+def test_pair_grid_matches_flat(spark, sf_dir, monkeypatch, name):
+    """The triangle-grid decomposition inside bucket_pair_verify (s id-hash
+    blocks per bucket, pairs enumerated per (bucket, block_i, block_j)
+    cell) must return EXACTLY the flat per-bucket enumeration's pairs —
+    the block split is a parallelism shape, never a semantics change.
+    Forcing the callers' bucket estimate to three blocks' worth exercises
+    the s>1 path on the small fixture."""
     import __spark_entry__ as ent
-    import phenoxtract_spark.queries_core as qc
+    from phenoxtract_spark.operators import similarity
 
-    fn = ent.queries()["embedding_hard_negatives"]
-    flat = {tuple(r) for r in fn(spark, sf_dir).collect()}
-    # force s = ceil((n//16)/384) > 1 regardless of fixture size
-    monkeypatch.setattr(qc, "table_num_rows", lambda sf, t: 16 * 384 * 3 + 1)
-    grid = {tuple(r) for r in fn(spark, sf_dir).collect()}
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    fn = ent.queries()[name]
+    flat_df = fn(spark, sf_dir)
+    assert "Generate" not in plan(flat_df)
+    flat = {tuple(r) for r in flat_df.collect()}
+    verify = similarity.bucket_pair_verify
+    est = 3 * similarity._BLOCK_TARGET_BYTES
+    monkeypatch.setattr(
+        similarity, "bucket_pair_verify",
+        lambda *a, **k: verify(*a, **{**k, "est_bucket_bytes": est}),
+    )
+    grid_df = fn(spark, sf_dir)
+    assert "Generate" in plan(grid_df)  # the block explode ran: s = 3
+    grid = {tuple(r) for r in grid_df.collect()}
     assert grid == flat and len(flat) > 0

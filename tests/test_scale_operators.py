@@ -245,6 +245,38 @@ def test_ivf_neardup_recall_vs_bruteforce(spark, sf_dir):
         assert recall >= 0.8, (recall, len(truth), len(got))
 
 
+@pytest.fixture(scope="module")
+def tiny_embeddings(tmp_path_factory, sf_dir):
+    """Zero-row and one-row slices of the embeddings table, written with
+    pyarrow so the file schema is the real one."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    dirs = {}
+    for n in (0, 1):
+        d = tmp_path_factory.mktemp(f"embeddings_{n}_rows")
+        pq.write_table(table.slice(0, n), d / "embeddings.parquet")
+        dirs[n] = str(d)
+    return dirs
+
+
+@pytest.mark.parametrize("rows", [0, 1])
+@pytest.mark.parametrize("name", [
+    "similarity_neardup_pairs", "dedup_semantic_canonical",
+    "embedding_hard_negatives", "similarity_ivf_topk",
+    "similarity_ivf_nprobe_topk", "similarity_pq_adc_topk",
+    "similarity_ivfpq_topk",
+])
+def test_similarity_degenerate_inputs(spark, tiny_embeddings, name, rows):
+    """Every similarity query returns a defined result on an empty and a
+    single-vector corpus: one canonical row per vector for semantic dedup,
+    and no pairs or neighbors anywhere else (a lone vector has no mate)."""
+    import __spark_entry__ as ent
+
+    out = ent.queries()[name](spark, tiny_embeddings[rows]).collect()
+    assert len(out) == (rows if name == "dedup_semantic_canonical" else 0)
+
+
 def test_hyperplane_candidates_recall(spark, sf_dir):
     """Banded-signature candidates must recover most cos ≥ 0.9 pairs."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
